@@ -53,11 +53,15 @@ def generate_new_filename(
     return filename_for(info, num)
 
 
-def filename_for(info: Mapping[str, str], num: int) -> str:
-    """Pure naming given an already-assigned sequence number ``num``.
+def name_stem(info: Mapping[str, str]) -> str:
+    """The ``lp``-independent part of the new filename:
+    ``[_Sygnatura][_numer-NADAWCA-TYP-w-sprawie]``, ``""`` when every
+    metadata part is empty after scrubbing.
 
-    Split out of :func:`generate_new_filename` so the Spark pipeline can
-    feed a window-function ``row_number`` instead of a mutable counter.
+    Depends on the extracted metadata only, so the extraction pass can
+    compute it per document before any sequence number exists; the Spark
+    pipeline then composes the name in the JVM (``pipeline/extract.
+    new_name_col``) with the same rule as :func:`compose_filename`.
     """
     sygnatura = _clean_part(info.get("sygnatura_sprawy", "")).replace(" ", "_")
     numer = _clean_part(info.get("numer_dokumentu", "")).replace(" ", "-")
@@ -65,16 +69,28 @@ def filename_for(info: Mapping[str, str], num: int) -> str:
     typ = _clean_part(info.get("typ_dokumentu", "")).upper().replace(" ", "-")
     w_sprawie = _clean_part(info.get("w_sprawie", "")).replace(" ", "-")[:50]
 
-    name = str(num)
-    if sygnatura:
-        name += f"_{sygnatura}"
+    stem = f"_{sygnatura}" if sygnatura else ""
     hyphen_parts = [p for p in (numer, nadawca, typ, w_sprawie) if p]
     if hyphen_parts:
-        name += "_" + "-".join(hyphen_parts)
+        stem += "_" + "-".join(hyphen_parts)
+    return stem
 
-    if name == str(num):
+
+def compose_filename(num: int, stem: str) -> str:
+    """``{num}{stem}.pdf``; an empty stem (no usable metadata) yields
+    ``dokument_do_weryfikacji_{num}.pdf``."""
+    if not stem:
         return f"dokument_do_weryfikacji_{num}.pdf"
-    return f"{name}.pdf"
+    return f"{num}{stem}.pdf"
+
+
+def filename_for(info: Mapping[str, str], num: int) -> str:
+    """Pure naming given an already-assigned sequence number ``num``.
+
+    Split out of :func:`generate_new_filename` so the Spark pipeline can
+    feed a window-function ``row_number`` instead of a mutable counter.
+    """
+    return compose_filename(num, name_stem(info))
 
 
 # gui/constants.py:9-13 — per-mode display patterns for the year-scoped

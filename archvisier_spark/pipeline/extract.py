@@ -5,15 +5,18 @@ parallel per-document OCR → metadata cascade → sequential numbering →
 rename.  Spark shape::
 
     documents(url, warc_ts, html, text, lang)
-      → size-aware repartition (skew defusal, SURVEY.md §4)
-      → mapInPandas(extract_batch)          # Arrow batches, kernel per doc
-      → with_sequence(lp)                    # scalable counter semantics
-      → new_name via filename_for            # X14
+      → mapInArrow(extract_batches)          # map-only, kernel per doc;
+                                             # also emits name_stem
+      → with_sequence(lp)                    # JVM two-phase dense rank
+      → new_name = compose(lp, name_stem)    # JVM expression (X14)
 
 All per-document logic is the pure kernel, executed inside Arrow-batched
-``mapInPandas`` so Python is entered once per batch, never per row on the
-driver (north rule).  Errors stay data: a malformed payload produces a row
-with the reference's error literals, never a task failure.
+``mapInArrow`` so Python is entered once per batch, never per row on the
+driver (north rule).  Numbering and naming are JVM expressions, so a
+flagship pass crosses into Python through exactly one operator (every
+Python task pays a fixed worker start-up cost, and every extra Python
+operator adds its own tasks).  Errors stay data: a malformed payload
+produces a row with the reference's error literals, never a task failure.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from archvisier_spark.kernel.cascade import extract_info_from_text
 from archvisier_spark.kernel.document import extract_document_text
-from archvisier_spark.kernel.naming import filename_for
+from archvisier_spark.kernel.naming import name_stem
 from archvisier_spark.kernel.spans import detect_document_type_span, find_all_occurrences
 from archvisier_spark.pipeline.numbering import with_sequence
 
@@ -61,6 +64,9 @@ EXTRACT_SCHEMA = T.StructType(
         T.StructField("spans", SPAN_TYPE, False),
         T.StructField("n_chars", T.LongType(), False),
         T.StructField("n_bytes", T.LongType(), False),
+        # lp-independent part of new_name (kernel/naming.name_stem);
+        # with_new_names composes the name from it in the JVM
+        T.StructField("name_stem", T.StringType(), False),
     ]
 )
 
@@ -126,6 +132,7 @@ def _metadata_columns(cols: dict, url, warc_ts, lang, fmt, text, status, n_bytes
     cols["spans"].append(info_spans(text, info))
     cols["n_chars"].append(len(text))
     cols["n_bytes"].append(n_bytes)
+    cols["name_stem"].append(name_stem(info))
 
 
 _FIELD_NAMES = [f.name for f in EXTRACT_SCHEMA.fields]
@@ -201,6 +208,7 @@ def _arrow_out_schema(in_schema):
             ),
             pa.field("n_chars", pa.int64()),
             pa.field("n_bytes", pa.int64()),
+            pa.field("name_stem", pa.string()),
         ]
     )
 
@@ -259,6 +267,7 @@ def make_extract_arrow(language: str, work_mode: str, case_signature: str,
                 cols["spans"].append(info_spans(text, info))
                 cols["n_chars"].append(len(text))
                 cols["n_bytes"].append(len(payload) if payload else 0)
+                cols["name_stem"].append(name_stem(info))
             arrays = [
                 batch.column("url"),
                 batch.column("warc_ts"),
@@ -467,6 +476,17 @@ def with_display_numbers(
     return numbered.withColumn(out_col, disp).drop("__year")
 
 
+def new_name_col():
+    """JVM form of :func:`kernel.naming.compose_filename` over the ``lp``
+    and ``name_stem`` columns: ``{lp}{name_stem}.pdf``, or
+    ``dokument_do_weryfikacji_{lp}.pdf`` when the stem is empty."""
+    lp_s = F.col("lp").cast("string")
+    return F.when(
+        F.col("name_stem") == "",
+        F.concat(F.lit("dokument_do_weryfikacji_"), lp_s, F.lit(".pdf")),
+    ).otherwise(F.concat(lp_s, F.col("name_stem"), F.lit(".pdf")))
+
+
 def with_new_names(
     extracted: DataFrame,
     work_mode: str = "KP",
@@ -477,8 +497,11 @@ def with_new_names(
 
     ``lp`` = dense 1-based sequence in ``url`` order per work-mode — equal
     to the reference's sequential ``counters[mode]`` bumps over
-    ``sorted(glob)`` (gui/processing_worker.py:320-322,373).  Naming runs
-    in an Arrow-batched pandas UDF over the kernel's pure ``filename_for``.
+    ``sorted(glob)`` (gui/processing_worker.py:320-322,373).  ``new_name``
+    is composed in the JVM from ``lp`` and the extraction's ``name_stem``
+    column (:func:`new_name_col`), which is then dropped; no Python runs
+    here.  ``extracted`` must carry ``name_stem`` (EXTRACT_SCHEMA) —
+    ``ValueError`` otherwise.
 
     Pass ``keys_df`` = the raw input table (or any cheap 1:1 url source):
     extraction is 1-row-in→1-row-out, so input urls number the output —
@@ -493,6 +516,11 @@ def with_new_names(
     is exact.  Raises ``ValueError`` if the claimed sort order doesn't
     hold.
     """
+    if "name_stem" not in extracted.columns:
+        raise ValueError(
+            "with_new_names: input has no 'name_stem' column — pass "
+            "extract_documents output (EXTRACT_SCHEMA)"
+        )
     if assume_sorted:
         from archvisier_spark.pipeline.numbering import with_sequence_sorted
 
@@ -512,33 +540,4 @@ def with_new_names(
             out_col="lp",
             keys_df=keys,
         )
-
-    @F.pandas_udf(T.StringType())
-    def name_udf(
-        lp: pd.Series,
-        sygnatura: pd.Series,
-        numer: pd.Series,
-        nadawca: pd.Series,
-        typ: pd.Series,
-        w_sprawie: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                filename_for(
-                    {
-                        "sygnatura_sprawy": s,
-                        "numer_dokumentu": n,
-                        "nadawca_odbiorca": na,
-                        "typ_dokumentu": t,
-                        "w_sprawie": w,
-                    },
-                    int(i),
-                )
-                for i, s, n, na, t, w in zip(lp, sygnatura, numer, nadawca, typ, w_sprawie)
-            ]
-        )
-
-    return numbered.withColumn(
-        "new_name",
-        name_udf("lp", "sygnatura_sprawy", "numer_dokumentu", "nadawca_odbiorca", "typ_dokumentu", "w_sprawie"),
-    )
+    return numbered.withColumn("new_name", new_name_col()).drop("name_stem")

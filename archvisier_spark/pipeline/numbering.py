@@ -9,15 +9,21 @@ module implements the classic two-phase dense-rank:
   1. range-repartition a NARROW slice (keys only) by the order column —
      partition *i* holds a contiguous key range below partition *i+1*;
   2. ``row_number`` within each partition (parallel, no global shuffle);
-  3. collect per-partition counts (one tiny row per partition), prefix-sum
-     them on the driver, broadcast the offsets back, add.
+  3. count rows per (partition, group) — one tiny row each — and turn the
+     counts into offsets with a running-sum window over the partition ids;
+     broadcast that table and add.  Nothing is collected to the driver and
+     no Python runs: the offsets are a JVM plan with real size statistics,
+     so the planner can size the key side of the re-attach join below.
 
 The full-width payload never moves through the numbering shuffle; numbers
-re-attach with an equi-join on the unique key.  That re-attach join is
-the one place the payload crosses a shuffle (hash by key on both sides) —
-at 10^12 rows it is a single well-partitioned co-shuffle, the standard
-price of attaching a global rank; an Iceberg table with a url sort order
-would eliminate it (ranks become a metadata-only merge on sorted scans).
+re-attach with an equi-join on the unique key, the offsets with a second
+(broadcast) join on the partition id.  While the key slice is small the
+planner broadcasts it and the payload streams through; beyond the
+broadcast threshold the re-attach join is the one place the payload
+crosses a shuffle (hash by key on both sides) — at 10^12 rows it is a
+single well-partitioned co-shuffle, the standard price of attaching a
+global rank; an Iceberg table with a url sort order would eliminate it
+(ranks become a metadata-only merge on sorted scans).
 AQE partition coalescing is safe here: merged range partitions stay
 contiguous, so offsets remain correct.
 """
@@ -42,7 +48,7 @@ def with_sequence(
 
     ``keys_df``: optional cheap source of the SAME key set (must be 1:1
     with ``df`` on ``key_cols``).  When ``df`` is the output of an
-    expensive transform (e.g. the extraction mapInPandas), deriving the
+    expensive transform (e.g. the extraction mapInArrow), deriving the
     counting slice from ``df`` would recompute that transform twice — pass
     the raw input keys instead (a column-pruned parquet scan of ``url``
     costs almost nothing)."""
@@ -54,7 +60,7 @@ def with_sequence(
     slim = source.select(*key_cols).repartitionByRange(n, F.col(order_col))
     # CRITICAL: RangePartitioning samples split points PER EXECUTION — two
     # jobs over the same lazy plan can land rows in different partitions.
-    # The offsets (collected below) and the __pid/__rn the join reads must
+    # The offsets (counted below) and the __pid/__rn the join reads must
     # come from ONE materialisation, so pin the slim slice here.  Cost is
     # bounded: this is the pruned key slice, never the payload.
     # Cluster note: localCheckpoint stores blocks on executors — an
@@ -62,41 +68,40 @@ def with_sequence(
     # real cluster the same pin is a written table (the Iceberg index-
     # table analog, exactly like q_minhash_lsh_dedup's shingle table);
     # local mode has no executor loss, so the in-memory form is safe here.
-    slim = slim.localCheckpoint(eager=True)
-    slim = slim.withColumn("__pid", F.spark_partition_id())
-    w = Window.partitionBy("__pid", *partition_cols).orderBy(order_col)
-    slim = slim.withColumn("__rn", F.row_number().over(w))
+    slim = slim.localCheckpoint(eager=True).withColumn(
+        "__pid", F.spark_partition_id()
+    )
 
-    # one row per (physical partition, group): tiny — collect + prefix-sum
-    counts = (
+    # one row per (physical partition, group): tiny.  Offset of a
+    # partition = rows of the same group in all lower partitions.
+    before = (
+        Window.partitionBy(*partition_cols)
+        .orderBy("__pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = (
         slim.groupBy("__pid", *partition_cols)
         .agg(F.count("*").alias("__cnt"))
-        .collect()
-    )
-    if not counts:
-        # empty input: createDataFrame([]) can't infer a schema — return the
-        # (empty) frame with a typed null sequence column instead of crashing
-        return df.withColumn(out_col, F.lit(None).cast("long"))
-    by_group: dict[tuple, list[tuple[int, int]]] = {}
-    for row in counts:
-        group = tuple(row[c] for c in partition_cols)
-        by_group.setdefault(group, []).append((row["__pid"], row["__cnt"]))
-    offset_rows = []
-    for group, pid_counts in by_group.items():
-        running = 0
-        for pid, cnt in sorted(pid_counts):
-            offset_rows.append((*group, pid, running))
-            running += cnt
-    offsets = spark.createDataFrame(
-        offset_rows, [*partition_cols, "__pid", "__offset"]
+        .select(
+            *partition_cols,
+            "__pid",
+            F.coalesce(F.sum("__cnt").over(before), F.lit(0)).alias("__offset"),
+        )
     )
 
-    numbered = (
-        slim.join(F.broadcast(offsets), [*partition_cols, "__pid"])
+    w = Window.partitionBy("__pid", *partition_cols).orderBy(order_col)
+    ranked = slim.withColumn("__rn", F.row_number().over(w))
+    # Re-attach (key → pid, rn) to the payload BEFORE the offsets: the
+    # planner sizes a join as the product of its inputs, so a ranked⋈
+    # offsets subtree would look far larger than the payload and AQE
+    # would broadcast the payload instead of the key slice.
+    out_cols = [*key_cols, *(c for c in df.columns if c not in key_cols), out_col]
+    return (
+        df.join(ranked, key_cols)
+        .join(F.broadcast(offsets), [*partition_cols, "__pid"])
         .withColumn(out_col, (F.col("__offset") + F.col("__rn")).cast("long"))
-        .select(*key_cols, out_col)
+        .select(*out_cols)
     )
-    return df.join(numbered, key_cols)
 
 
 _MID_IDX_MASK = (1 << 33) - 1  # monotonically_increasing_id: low 33 bits
@@ -213,8 +218,11 @@ def with_sequence_sorted(
     for r in ordered:
         offset_rows.append((r["pid"], running, r["cnt"], r["mn"], r["mx"]))
         running += r["cnt"]
+    # from a pandas frame, so the table is built through Arrow on the
+    # driver; a Python list would go through a PythonRDD and start a
+    # Python worker pool just to read five columns back
     offsets = spark.createDataFrame(
-        offset_rows,
+        pd.DataFrame(offset_rows, columns=["__pid", "__offset", "__cnt", "__mn", "__mx"]),
         f"__pid int, __offset long, __cnt long, __mn {dtype}, __mx {dtype}",
     )
 

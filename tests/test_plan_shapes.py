@@ -92,3 +92,75 @@ def test_numbering_joins_pruned_keys_not_payload(spark, tmp_path):
     assert "html" not in plan.split("Scan ExistingRDD[url", 1)[1].split("]", 1)[0]
     # exactly one parquet scan feeds the payload (extraction runs once)
     assert plan.count("FileScan parquet") == 1
+
+
+def _nodes(plan):
+    """Physical operators of ``plan`` in pre-order, looking through the
+    adaptive wrapper and query stages (current plan: initial before
+    execution, final after)."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _nodes(plan.executedPlan())
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _nodes(plan.plan())
+        return
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
+
+
+def _is_python(node) -> bool:
+    return node.getClass().getName().startswith("org.apache.spark.sql.execution.python.")
+
+
+def _python_rdd_scans(nodes) -> list:
+    """RDD scans fed by a PythonRDD (``createDataFrame`` from a Python list:
+    each read starts Python workers)."""
+    return [n for n in nodes if n.getClass().getSimpleName() == "RDDScanExec"
+            and "PythonRDD" in n.rdd().toDebugString()]
+
+
+def _assert_one_python_operator(plan):
+    nodes = list(_nodes(plan))
+    python = [n.getClass().getSimpleName() for n in nodes if _is_python(n)]
+    assert python == ["MapInArrowExec"], python
+    assert not _python_rdd_scans(nodes)
+    for node in nodes:
+        if node.getClass().getSimpleName() == "BroadcastExchangeExec":
+            below = [n.getClass().getSimpleName() for n in _nodes(node)]
+            assert "MapInArrowExec" not in below, "the extraction payload is broadcast"
+
+
+def test_flagship_pass_runs_one_python_operator(spark, tmp_path):
+    """Numbering and naming stay in the JVM: the extraction mapInArrow is
+    the only operator that enters Python, no offsets table is read back
+    from a PythonRDD, and the payload streams through the re-attach join
+    (the key side is the one broadcast) — before and after AQE
+    re-optimises the running plan."""
+    from archvisier_spark.corpus import corpus_df
+    from archvisier_spark.pipeline.extract import extract_documents, with_new_names
+
+    path = str(tmp_path / "c3")
+    corpus_df(spark, 40, seed=5, partitions=2).write.mode("overwrite").parquet(path)
+    docs = spark.read.parquet(path)
+    named = with_new_names(extract_documents(docs), keys_df=docs)
+    qe = named._jdf.queryExecution()
+    _assert_one_python_operator(qe.executedPlan())
+    assert len(named.collect()) == 40
+    assert "isFinalPlan=true" in qe.executedPlan().toString()
+    _assert_one_python_operator(qe.executedPlan())
+
+
+def test_sorted_numbering_offsets_skip_python_rdd(spark):
+    """The sorted path's validated offsets table is built from a pandas
+    frame (Arrow, on the driver), not from a Python list."""
+    from archvisier_spark.pipeline.numbering import with_sequence_sorted
+
+    df = spark.range(0, 200, 1, 4).select(
+        F.format_string("u%06d", F.col("id")).alias("url")
+    )
+    out = with_sequence_sorted(df, "url")
+    assert not _python_rdd_scans(_nodes(out._jdf.queryExecution().executedPlan()))
+    assert sorted(r["lp"] for r in out.collect()) == list(range(1, 201))

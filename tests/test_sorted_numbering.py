@@ -118,6 +118,16 @@ def test_empty_input_gets_null_lp(spark):
     assert dict(out.dtypes)["lp"] == "bigint"
 
 
+def test_with_sequence_empty_keys_typed_lp(spark):
+    df = spark.range(10).select(
+        F.format_string("u%03d", F.col("id")).alias("url"), F.lit("KP").alias("work_mode")
+    ).filter(F.lit(False))
+    for out in (with_sequence(df, "url", partition_cols=("work_mode",)),
+                with_sequence(df, "url", keys_df=df.select("url"))):
+        assert out.count() == 0
+        assert dict(out.dtypes)["lp"] == "bigint"
+
+
 def test_with_new_names_assume_sorted_matches_default(spark, tmp_path):
     """End-to-end flagship parity: extraction + numbering + naming over a
     url-sorted corpus must produce identical (lp, new_name) under both
